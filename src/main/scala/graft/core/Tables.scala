@@ -1,6 +1,16 @@
 package graft.core
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{AnalysisException, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Table access for the driver-generated test corpus (TESTDATA.md) and for
   * engine-managed curated tables.
@@ -11,9 +21,75 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * free. Nothing here collects to the driver.
   */
 object Tables {
-  /** Load one test table, e.g. table(spark, "/root/testdata/sf0.01", "lineitem"). */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalizeEventTs(spark.read.parquet(s"$sfDir/$name.parquet"))
+  /** Load one corpus table, e.g. table(spark, sfDir, "lineitem"). The
+    * schema comes from [[schemaOf]], so building the frame runs no job. */
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    normalizeEventTs(spark.read.schema(schemaOf(spark, path)).parquet(path))
+  }
+
+  /** The schema `spark.read.parquet(path).schema` infers for a parquet
+    * file or flat directory (every field nullable, as the relation
+    * reports it), read on the driver instead of in a job.
+    *
+    * Spark's inference touches ONE footer — `_common_metadata`, else
+    * `_metadata`, else the first data file by path — but reads it in a
+    * one-task distributed job, which dominated a short query's frame
+    * construction. This reads that same footer here and converts it with
+    * Spark's own converter under the session's SQL conf, so the
+    * row-metadata schema key, `nanosAsLong`, `binaryAsString`, INT96 and
+    * `inferTimestampNTZ` apply exactly as in inference. The footer is
+    * read on every call and never cached: a rewritten file is always
+    * seen. Partitioned directories carry partition columns this does not
+    * derive; they stay on `spark.read`'s inference. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    val qualified = p.makeQualified(fs.getUri, fs.getWorkingDirectory)
+    val root =
+      try fs.getFileStatus(qualified)
+      catch { case _: FileNotFoundException =>
+        throw new AnalysisException("PATH_NOT_FOUND",
+          Map("path" -> qualified.toString)) }
+    val summaries = Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    val leaves =
+      if (root.isFile) Seq(root)
+      else {
+        val children = fs.listStatus(qualified).toSeq
+        require(!children.exists(_.isDirectory),
+          s"$path is partitioned; read it with spark.read.parquet")
+        // the file index's hidden-file rule, which keeps the summaries
+        children.filter { s =>
+          val n = s.getPath.getName
+          summaries.contains(n) || !(n.startsWith("_") || n.startsWith(".") ||
+            n.endsWith("._COPYING_"))
+        }
+      }
+    val data = leaves.filterNot(s => summaries.contains(s.getPath.getName))
+      .sortBy(_.getPath.toString)
+    val file = (summaries.flatMap(n => leaves.find(_.getPath.getName == n)) ++ data)
+      .headOption.getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA",
+        Map("format" -> "Parquet")))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(file, conf),
+      HadoopReadOptions.builder(conf).withMetadataFilter(SKIP_ROW_GROUPS).build())
+    val footer = try reader.getFooter finally reader.close()
+    nullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(file.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+      .asInstanceOf[StructType]
+  }
+
+  /** A file relation reports every field, at every depth, as nullable
+    * (Spark's own `asNullable` is internal). */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
 
   /** Engine contract for the events stream: `ts` is an epoch-NANOS long.
     *

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -177,11 +179,17 @@ object Incremental {
       // maintenance crash between day-dir write and swap): rebuild it once
       // — the same day-dir listing one fallback read would pay, but it
       // repairs the store for every subsequent read instead of paying the
-      // listing forever. Idempotent single-writer swap; on any failure
-      // (e.g. a read-only mount) fall back to the day dirs for this read.
+      // listing forever. Idempotent single-writer swap; on a non-fatal
+      // failure (e.g. a read-only mount) fall back to the day dirs for this
+      // read. An interrupt falls back too, with the flag re-set for the
+      // caller; fatal errors propagate.
       fs.exists(root) &&
         (try { compactView(spark, path); fresh() }
-        catch { case _: Throwable => false })
+        catch {
+          case _: InterruptedException =>
+            Thread.currentThread().interrupt(); false
+          case NonFatal(_) => false
+        })
     }
     val src =
       if (useView) spark.read.parquet(compact.toString)

@@ -55,7 +55,7 @@ object StreamingQueries {
   def q37StreamWindow(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.core.Tables.schemaOf(spark, path)
     // normalizeEventTs pins ts to the epoch-NANOS-long contract whatever
     // the corpus drop shipped (ns-as-long or µs timestamp); integer DIV
     // truncates to micros exactly like DuckDB's ns->us read does
@@ -93,12 +93,12 @@ object StreamingQueries {
   def q89StreamEnrich(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.core.Tables.schemaOf(spark, path)
     val events = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
       .withColumn("event_ts", timestamp_micros(expr("ts div 1000")))
-    val dim = spark.read.parquet(s"$dir/customer.parquet")
+    val dim = graft.core.Tables.table(spark, dir, "customer")
       .select(col("c_custkey"), col("c_mktsegment"))
     val agg = Streams.enrichedWindowedAgg(events, dim,
       streamKey = "user_id", dimKey = "c_custkey", tsCol = "event_ts",
@@ -133,7 +133,7 @@ object StreamingQueries {
   // not store count, dominates; see withStatePartitions for the trade.
   def q51StreamSession(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    val schema = spark.read.parquet(path).schema
+    val schema = graft.core.Tables.schemaOf(spark, path)
     val events = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
@@ -165,7 +165,7 @@ object StreamingQueries {
     * survives is arrival-order-dependent, the key set is not. */
   def q60StreamDedup(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.core.Tables.schemaOf(spark, s"$dir/events.parquet")
     val events = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
@@ -191,7 +191,7 @@ object StreamingQueries {
     * batch join the oracle spells. */
   def q61StreamJoin(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.core.Tables.schemaOf(spark, s"$dir/events.parquet")
     def stream() = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
@@ -227,7 +227,7 @@ object StreamingQueries {
     * two stream maxima) passed. */
   def q170StreamOuterJoin(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.core.Tables.schemaOf(spark, s"$dir/events.parquet")
     def stream() = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
@@ -262,7 +262,7 @@ object StreamingQueries {
     * rule. */
   def q167StreamUniques(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.core.Tables.schemaOf(spark, s"$dir/events.parquet")
     val events = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
@@ -292,7 +292,7 @@ object StreamingQueries {
     * batches, and the oracle replays it as one rank-1 window. */
   def q161StreamUpsert(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.core.Tables.schemaOf(spark, s"$dir/events.parquet")
     val events = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
@@ -319,7 +319,7 @@ object StreamingQueries {
     * because replayed events still land on their historical version. */
   def q215StreamScd2(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.core.Tables.schemaOf(spark, s"$dir/events.parquet")
     val events = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
@@ -358,7 +358,7 @@ object StreamingQueries {
     * group-by, which is what the oracle replays. */
   def q232StreamComplete(spark: SparkSession, dir: String): DataFrame =
       withStatePartitions(spark, 8) {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.core.Tables.schemaOf(spark, s"$dir/events.parquet")
     val events = spark.readStream.schema(schema)
       .option("pathGlobFilter", "events.parquet").parquet(dir)
       .transform(graft.core.Tables.normalizeEventTs)
@@ -433,7 +433,7 @@ object StreamingQueries {
         round(col("value") * 100).cast("long").as("vc"))
       .repartition(4)
       .write.mode("overwrite").parquet(s"$base/feed")
-    val schema = spark.read.parquet(s"$base/feed").schema
+    val schema = graft.core.Tables.schemaOf(spark, s"$base/feed")
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$base/feed")
     val q = Streams.histogramSink(stream, s"$base/state", "vc",

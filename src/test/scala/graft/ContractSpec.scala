@@ -70,4 +70,30 @@ class ContractSpec extends AnyFunSuite {
         s"README claims ${m.group(1)} queries; registry has ${qs.size}")
     }
   }
+
+  test("queries read corpus files only through Tables (no per-read schema job)") {
+    // spark.read.parquet on a corpus file infers its schema in a Spark
+    // job of its own; Tables.table/schemaOf read the footer on the driver.
+    // A call is flagged when its argument names a `.parquet` path, inline
+    // or through a `val` bound to one in the same file.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    val files = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty, s"no sources under $root")
+    val call = "read\\.parquet\\(([^)]*)\\)".r
+    val pathVal = "val\\s+(\\w+)\\s*=\\s*s?\"[^\"]*\\.parquet\"".r
+    val offenders = files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      val corpusVals = pathVal.findAllMatchIn(src).map(_.group(1)).toSet
+      call.findAllMatchIn(src).collect {
+        case m if m.group(1).contains(".parquet\"") ||
+            corpusVals(m.group(1).trim) =>
+          val line = src.substring(0, m.start).count(_ == '\n') + 1
+          s"${f.getFileName}:$line: ${m.matched}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"read corpus tables via Tables.table / Tables.schemaOf: $offenders")
+  }
 }

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.entities.Fixtures
 import graft.ingest.Staging
 import graft.jobs.ProcessDaily
+import org.apache.spark.sql.AnalysisException
 
 /** SQL-first access: the curated warehouse and the test corpus register
   * as views, and multi-table SQL (the reference users' surface) runs
@@ -102,5 +103,109 @@ class TablesSpec extends SparkSpec {
     assert(byId == Map(1L -> None, 2L -> None, 3L -> Some(9.5)))
     // plain read may bind to a single footer's schema — readEvolved is
     // the contract for evolved tables, not the default scan
+  }
+
+  private val corpusTables = Seq("region", "nation", "customer", "supplier",
+    "part", "orders", "lineitem", "events", "documents", "embeddings")
+
+  test("schemaOf matches spark.read.parquet's inferred schema on the corpus") {
+    for (sf <- Seq("sf0.001", "sf0.01"); t <- corpusTables) {
+      val p = s"/root/testdata/$sf/$t.parquet"
+      assert(Tables.schemaOf(spark, p) == spark.read.parquet(p).schema, p)
+    }
+  }
+
+  test("schemaOf honours Spark's row-metadata key on nested, NTZ and decimal columns") {
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types.MetadataBuilder
+    val dir = s"${scratch("schemaof-spark")}/t"
+    val comment = new MetadataBuilder().putString("comment", "row key").build()
+    spark.range(5).select(
+      col("id").as("id", comment),
+      expr("CAST(id AS DECIMAL(20, 4))").as("dec"),
+      expr("CAST(TIMESTAMP_NTZ'2024-01-01 00:00:00' AS TIMESTAMP_NTZ)").as("ntz"),
+      current_timestamp().as("ts"),
+      struct(col("id").as("a"), struct(lit("x").as("c")).as("b")).as("s"),
+      array(col("id"), lit(null).cast("long")).as("arr"),
+      map(lit("k"), struct(col("id").as("v"))).as("m"))
+      .write.parquet(dir)
+    val part = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(part.toString),
+        spark.sparkContext.hadoopConfiguration))
+    val kv = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+      finally reader.close()
+    assert(kv.containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    val got = Tables.schemaOf(spark, dir)
+    assert(got == spark.read.parquet(dir).schema)
+    assert(got("id").metadata == comment, "the row-metadata schema was not used")
+    assert(Tables.schemaOf(spark, part.toString) ==
+      spark.read.parquet(part.toString).schema)
+  }
+
+  test("Tables.table launches no Spark job; an inferring read does") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(Option(e.properties.getProperty("spark.job.description"))
+            .getOrElse("job"))
+    }
+    val sc = spark.sparkContext
+    // the bus delivers in order: once the marker job is seen, every job
+    // started before it has been counted
+    def jobsBefore(body: => Unit): Int = {
+      jobs.clear()
+      body
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains("marker"), "listener never saw the marker job")
+      jobs.size - 1
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "Tables.table job count")
+    try {
+      val dir = "/root/testdata/sf0.01"
+      assert(jobsBefore(corpusTables.foreach(t => Tables.table(spark, dir, t))) == 0)
+      assert(jobsBefore(spark.read.parquet(s"$dir/orders.parquet")) >= 1,
+        "the counter is vacuous: inference should launch a job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("schemaOf re-reads the footer: an overwrite between calls is seen") {
+    import spark.implicits._
+    val dir = scratch("schemaof-rewrite")
+    Seq((1L, "a")).toDF("id", "name").write.parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq == Seq("id", "name"))
+    Seq((2.5, true)).toDF("score", "flag")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val df = Tables.table(spark, dir, "t")
+    assert(df.columns.toSeq == Seq("score", "flag"))
+    assert(df.as[(Double, Boolean)].collect().toSeq == Seq((2.5, true)))
+  }
+
+  test("schemaOf fails like spark.read.parquet on a missing path or an empty dir") {
+    def same(path: String, condition: String): Unit = {
+      val want = intercept[AnalysisException](spark.read.parquet(path))
+      val got = intercept[AnalysisException](Tables.schemaOf(spark, path))
+      assert(want.getCondition == condition)
+      assert(got.getCondition == want.getCondition)
+      assert(got.getMessage == want.getMessage)
+    }
+    val dir = scratch("schemaof-missing")
+    same(s"$dir/absent.parquet", "PATH_NOT_FOUND")
+    same(dir, "UNABLE_TO_INFER_SCHEMA")
+    val e = intercept[AnalysisException](Tables.table(spark, dir, "absent"))
+    assert(graft.core.FsOps.isMissingPath(e))
   }
 }

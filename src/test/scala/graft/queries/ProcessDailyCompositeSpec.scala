@@ -38,3 +38,25 @@ class ProcessDailyCompositeSpec extends SparkSpec {
     assert(flipped.forall(u => !day1Winners.contains(u)))
   }
 }
+
+/** q244's per-day executor fan-out releases what it holds on failure. */
+class FanOutSpec extends SparkSpec {
+  test("fanOut: a failing executor frees the staged cache after its siblings finish") {
+    import java.util.concurrent.atomic.AtomicBoolean
+    val staged = spark.range(100).toDF("id")
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
+    val siblingDone = new AtomicBoolean(false)
+    try {
+      val e = intercept[IllegalStateException] {
+        Lifecycle.fanOut(staged, Seq(
+          _ => throw new IllegalStateException("injected executor failure"),
+          df => { Thread.sleep(300); df.count(); siblingDone.set(true) }))(ec)
+      }
+      assert(e.getMessage == "injected executor failure")
+      assert(siblingDone.get, "the failure was rethrown while a sibling still ran")
+      assert(staged.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "the staged frame is still cached after a failed fan-out")
+    } finally pool.shutdown()
+  }
+}
