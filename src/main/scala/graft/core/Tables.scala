@@ -2,7 +2,7 @@ package graft.core
 
 import java.io.FileNotFoundException
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
@@ -23,25 +23,32 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 object Tables {
   /** Load one corpus table, e.g. table(spark, sfDir, "lineitem"). The
     * schema comes from [[schemaOf]], so building the frame runs no job. */
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val path = s"$sfDir/$name.parquet"
-    normalizeEventTs(spark.read.schema(schemaOf(spark, path)).parquet(path))
-  }
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalizeEventTs(parquet(spark, s"$sfDir/$name.parquet"))
 
-  /** The schema `spark.read.parquet(path).schema` infers for a parquet
-    * file or flat directory (every field nullable, as the relation
-    * reports it), read on the driver instead of in a job.
+  /** `spark.read.parquet(path)` with the schema from [[schemaOf]]: the
+    * same frame, built without a schema-inference job. On a partitioned
+    * directory Spark still discovers the partition columns, and infers
+    * their types, from the `key=value` paths on the driver. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  /** The data schema `spark.read.parquet(path).schema` infers for a
+    * parquet file or directory, flat or partitioned (every field
+    * nullable, as the relation reports it), read on the driver instead of
+    * in a job. Partition columns are not part of it.
     *
     * Spark's inference touches ONE footer — `_common_metadata`, else
-    * `_metadata`, else the first data file by path — but reads it in a
-    * one-task distributed job, which dominated a short query's frame
-    * construction. This reads that same footer here and converts it with
-    * Spark's own converter under the session's SQL conf, so the
-    * row-metadata schema key, `nanosAsLong`, `binaryAsString`, INT96 and
-    * `inferTimestampNTZ` apply exactly as in inference. The footer is
-    * read on every call and never cached: a rewritten file is always
-    * seen. Partitioned directories carry partition columns this does not
-    * derive; they stay on `spark.read`'s inference. */
+    * `_metadata`, else the first data file, each by full path across all
+    * partition directories — but reads it in a one-task distributed job,
+    * which dominated a short query's frame construction. This lists the
+    * same files with the file index's hidden-path rule, reads that footer
+    * here and converts it with Spark's own converter under the session's
+    * SQL conf, so the row-metadata schema key, `nanosAsLong`,
+    * `binaryAsString`, INT96 and `inferTimestampNTZ` apply exactly as in
+    * inference. The footer is read on every call and never cached: a
+    * rewritten file is always seen. Only `key=value` subdirectories are
+    * descended, as partition discovery does. */
   def schemaOf(spark: SparkSession, path: String): StructType = {
     val conf = spark.sessionState.newHadoopConf()
     val p = new Path(path)
@@ -53,21 +60,19 @@ object Tables {
         throw new AnalysisException("PATH_NOT_FOUND",
           Map("path" -> qualified.toString)) }
     val summaries = Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
-    val leaves =
-      if (root.isFile) Seq(root)
-      else {
-        val children = fs.listStatus(qualified).toSeq
-        require(!children.exists(_.isDirectory),
-          s"$path is partitioned; read it with spark.read.parquet")
-        // the file index's hidden-file rule, which keeps the summaries
-        children.filter { s =>
-          val n = s.getPath.getName
-          summaries.contains(n) || !(n.startsWith("_") || n.startsWith(".") ||
-            n.endsWith("._COPYING_"))
-        }
+    // the file index's hidden-path rule (Spark's shouldFilterOutPathName)
+    def visible(n: String) =
+      !((n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")) || summaries.exists(n.startsWith)
+    def leavesOf(dir: Path): Seq[FileStatus] =
+      fs.listStatus(dir).toSeq.filter(s => visible(s.getPath.getName)).flatMap { s =>
+        if (!s.isDirectory) Seq(s)
+        else if (s.getPath.getName.contains("=")) leavesOf(s.getPath)
+        else Seq.empty
       }
-    val data = leaves.filterNot(s => summaries.contains(s.getPath.getName))
+    val leaves = (if (root.isFile) Seq(root) else leavesOf(qualified))
       .sortBy(_.getPath.toString)
+    val data = leaves.filterNot(s => summaries.contains(s.getPath.getName))
     val file = (summaries.flatMap(n => leaves.find(_.getPath.getName == n)) ++ data)
       .headOption.getOrElse(throw new AnalysisException("UNABLE_TO_INFER_SCHEMA",
         Map("format" -> "Parquet")))
@@ -79,6 +84,11 @@ object Tables {
       new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
       .asInstanceOf[StructType]
   }
+
+  /** Whether two schemas have the same fields, types and metadata when
+    * nullability is ignored: a frame of one writes files whose footer
+    * [[schemaOf]] reads as the other. */
+  def sameShape(a: StructType, b: StructType): Boolean = nullable(a) == nullable(b)
 
   /** A file relation reports every field, at every depth, as nullable
     * (Spark's own `asNullable` is internal). */
@@ -168,7 +178,7 @@ object Tables {
       .filter(s => s.isDirectory && !s.getPath.getName.startsWith("."))
       .map(_.getPath.getName).sorted
     tables.foreach { t =>
-      spark.read.parquet(s"$curatedDir/$t").createOrReplaceTempView(t)
+      parquet(spark, s"$curatedDir/$t").createOrReplaceTempView(t)
     }
     tables
   }

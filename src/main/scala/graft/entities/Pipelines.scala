@@ -23,7 +23,7 @@ object Pipelines {
 
   /** Standard promoted columns every curated row carries: provenance + the
     * merge-ordering timestamps (ProcessDaily.usql:100-103). */
-  private def metaCols(ingestDate: Column): Seq[Column] = Seq(
+  private[entities] def metaCols(ingestDate: Column): Seq[Column] = Seq(
     ingestDate.as("etl_ingest_date"),
     col("urn").as("etl_source_id"),
     col("fetched_at"),
@@ -45,7 +45,7 @@ object Pipelines {
   /** Typed column from the parse-once struct: nested field access +
     * `try_cast` — per-field null-on-mistype, identical to the
     * get_json_object spelling. */
-  private def typedParsed(parsed: Column, field: Field): Column = {
+  private[entities] def typedParsed(parsed: Column, field: Field): Column = {
     val leaf = field.path.split('.').foldLeft(parsed)(_.getField(_))
     val c = field.typ match {
       case "int"  => leaf.try_cast("int")
@@ -74,24 +74,30 @@ object Pipelines {
     *
     * Parse-once: the field paths assemble into one pruned string-leaf
     * schema ([[graft.json.PathSchema]]) and the document parses with a
-    * single `from_json` — the per-field `get_json_object` spelling costs
-    * one full JSON parse PER FIELD per row, which for the widest entities
-    * (Event 126, PullRequest 138 columns) dominates the whole ETL. Paths
-    * shadowed by a longer path (leaf+branch conflicts — none in the
-    * current specs) fall back to `get_json_object`. */
+    * single `from_json`, bound once as `__doc` — the per-field
+    * `get_json_object` spelling costs one full JSON parse PER FIELD per
+    * row, and repeating the `from_json` in every field lets the optimizer
+    * prune each copy to a different top-level key, which parses a wide
+    * document once per distinct key. Paths shadowed by a longer path
+    * (leaf+branch conflicts — none in the current specs) fall back to
+    * `get_json_object`. */
   def project(staged: DataFrame, fields: Seq[Field]): DataFrame = {
     val schema = graft.json.PathSchema.forPaths(fields.map(_.path))
-    val parsed = from_json(col("data"), schema)
     val cols = fields.map { f =>
-      if (graft.json.PathSchema.isLeaf(schema, f.path)) typedParsed(parsed, f)
+      if (graft.json.PathSchema.isLeaf(schema, f.path)) typedParsed(col("__doc"), f)
       else typed(f)
     }
-    staged.select(metaCols(col("ingest_date")) ++ cols: _*)
+    staged.withColumn("__doc", from_json(col("data"), schema))
+      .select(metaCols(col("ingest_date")) ++ cols: _*)
   }
 
   // -- storage ---------------------------------------------------------------
 
   def tablePath(curatedDir: String, table: String) = s"$curatedDir/$table"
+
+  /** Read back a table an executor just wrote. */
+  private def written(spark: SparkSession, curatedDir: String, table: String): DataFrame =
+    graft.core.Tables.parquet(spark, tablePath(curatedDir, table))
 
   /** Read a curated table; absent table → empty with `like`'s schema
     * (bootstrap day — the CreateAndInitialize* CTAS scripts' role). */
@@ -144,7 +150,7 @@ object Pipelines {
     val merged = Merges.snapshotMerge(prior, fresh, Seq("etl_source_id"), mergeOrder)
     val result = if (spec.truncate) merged else prior.unionByName(merged)
     overwriteCurated(result, curatedDir, spec.table)
-    spark.read.parquet(tablePath(curatedDir, spec.table))
+    written(spark, curatedDir, spec.table)
   }
 
   // -- §2.10(c) array-child normalization -----------------------------------
@@ -183,7 +189,7 @@ object Pipelines {
       Seq("etl_source_id", "element_index"), mergeOrder)
     val result = if (spec.truncate) merged else prior.unionByName(merged)
     overwriteCurated(result, curatedDir, spec.table)
-    spark.read.parquet(tablePath(curatedDir, spec.table))
+    written(spark, curatedDir, spec.table)
   }
 
   // -- §2.10(b) collection replacement --------------------------------------
@@ -192,14 +198,12 @@ object Pipelines {
     * ProcessDaily.usql:25-91): latest crawl page-set per origin → explode
     * `resources.hrefs` → wholesale replacement of re-crawled origins,
     * carry-forward of the rest. */
-  /** One day's resolved membership rows for a collection entity, carrying
-    * `etl_ingest_date` (shared by the full rewrite and merge-on-read
-    * paths — MOR's latest-day-wins resolution keys on the date). */
-  def freshCollection(stagedDay: DataFrame, spec: CollectionSpec): DataFrame =
-    freshCollectionImpl(stagedDay, spec, keepDate = true)
-
-  private def freshCollectionImpl(stagedDay: DataFrame, spec: CollectionSpec,
-      keepDate: Boolean): DataFrame = {
+  /** One day's resolved membership rows for a collection entity (shared
+    * by the full rewrite and merge-on-read paths). `keepDate` carries
+    * `etl_ingest_date`, on which MOR's latest-day-wins resolution keys;
+    * the rewritten table has no such column. */
+  def freshCollection(stagedDay: DataFrame, spec: CollectionSpec,
+      keepDate: Boolean = true): DataFrame = {
     // parse-once: every link path (origin, member hrefs array, org/team
     // extras) in one typed from_json of the document
     val linksSchema = graft.json.PathSchema.forTypedPaths(
@@ -234,11 +238,11 @@ object Pipelines {
 
   def runCollection(spark: SparkSession, stagedDay: DataFrame, curatedDir: String,
       spec: CollectionSpec): DataFrame = {
-    val fresh = freshCollectionImpl(stagedDay, spec, keepDate = false)
+    val fresh = freshCollection(stagedDay, spec, keepDate = false)
     val prior = readCurated(spark, curatedDir, spec.table, fresh)
     val merged = Merges.collectionMerge(prior, fresh, spec.originCol)
     overwriteCurated(merged, curatedDir, spec.table)
-    spark.read.parquet(tablePath(curatedDir, spec.table))
+    written(spark, curatedDir, spec.table)
   }
 
   // -- §2.10(d) traffic pivot -----------------------------------------------
@@ -294,7 +298,7 @@ object Pipelines {
     val prior = readCurated(spark, curatedDir, spec.table, fresh)
     val merged = Merges.snapshotMerge(prior, fresh, spec.dedupKeys, trafficOrder(spec))
     overwriteCurated(merged, curatedDir, spec.table)
-    spark.read.parquet(tablePath(curatedDir, spec.table))
+    written(spark, curatedDir, spec.table)
   }
 
   // -- §2.10(e) snapshot + log ----------------------------------------------
@@ -311,7 +315,7 @@ object Pipelines {
       Seq("etl_source_id"), spec.versionField, mergeOrder)
     overwriteCurated(snap, curatedDir, spec.snapshot.table)
     overwriteCurated(log, curatedDir, spec.logTable)
-    (spark.read.parquet(tablePath(curatedDir, spec.snapshot.table)),
-      spark.read.parquet(tablePath(curatedDir, spec.logTable)))
+    (written(spark, curatedDir, spec.snapshot.table),
+      written(spark, curatedDir, spec.logTable))
   }
 }

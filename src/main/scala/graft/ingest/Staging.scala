@@ -3,6 +3,7 @@ package graft.ingest
 import graft.json.Docs._
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The staging layer: raw crawled JSON → the generic staging table — the
   * `StageData` procedure re-expressed (/root/reference/USQL/StageData.usql:5-38).
@@ -74,19 +75,28 @@ object Staging {
       .mode(SaveMode.Overwrite)
       .parquet(stagingDir)
 
+  /** Every staged day, with the partition columns as the reference's
+    * string keys (CreateGitHubDataTable.usql:25): partition-column type
+    * inference would surface yyyy-MM-dd as DATE. The data schema comes
+    * from one footer on the driver ([[graft.core.Tables.parquet]]), so
+    * building the frame runs no job. */
+  def readAll(spark: SparkSession, stagingDir: String): DataFrame =
+    graft.core.Tables.parquet(spark, stagingDir)
+      .withColumn("ingest_date", col("ingest_date").cast("string"))
+      .withColumn("entity_name", col("entity_name").cast("string"))
+
+  /** The columns and types of a [[readAll]] / [[readStaging]] frame, for
+    * planning over a day that has no rows. */
+  val schema: StructType = StructType.fromDDL(
+    "fetched_at TIMESTAMP, processed_at TIMESTAMP, deleted_at TIMESTAMP, " +
+      "urn STRING, data STRING, ingest_date STRING, entity_name STRING")
+
   /** Partition-pruned staging scan (ProcessDaily.usql:33-35 and 29 more):
     * both predicates are partition columns — no data files outside
     * `(date, entity)` are opened. */
   def readStaging(spark: SparkSession, stagingDir: String, ingestDate: String,
       entityFilter: DataFrame => DataFrame = identity): DataFrame =
-    entityFilter(
-      spark.read.parquet(stagingDir)
-        // partition-column type inference would surface yyyy-MM-dd as DATE;
-        // the staging contract is the reference's string partition key
-        // (CreateGitHubDataTable.usql:25)
-        .withColumn("ingest_date", col("ingest_date").cast("string"))
-        .withColumn("entity_name", col("entity_name").cast("string"))
-        .where(col("ingest_date") === ingestDate))
+    entityFilter(readAll(spark, stagingDir).where(col("ingest_date") === ingestDate))
 
   /** Convenience: exact entity match (P2). */
   def readEntity(spark: SparkSession, stagingDir: String, ingestDate: String,

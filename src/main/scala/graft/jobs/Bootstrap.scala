@@ -1,8 +1,6 @@
 package graft.jobs
 
-import graft.entities.{Pipelines, Specs}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.SparkSession
 
 /** Curated-layer bootstrap — the `CreateAndInitialize*.usql` scripts' role
   * (31 scripts, e.g. CreateAndInitializeCommit.usql:49-90): build every
@@ -29,12 +27,7 @@ object Bootstrap {
   /** Build all curated tables from every staged day. Partition pruning is
     * deliberately NOT applied — this is the full-history scan. */
   def run(spark: SparkSession, stagingDir: String, curatedDir: String,
-      parallelism: Int = 4): Seq[String] = {
-    val all = spark.read.parquet(stagingDir)
-      .withColumn("ingest_date", col("ingest_date").cast("string"))
-      .withColumn("entity_name", col("entity_name").cast("string"))
-    all.cache()
-    try ProcessDaily.runOn(spark, all, curatedDir, parallelism)
-    finally { all.unpersist(); () }
-  }
+      parallelism: Int = 4): Seq[String] =
+    ProcessDaily.runOn(spark, graft.ingest.Staging.readAll(spark, stagingDir),
+      curatedDir, parallelism)
 }

@@ -49,12 +49,12 @@ object MergeOnRead {
     def attempt(): Option[DataFrame] =
       if (!exists(spark, p)) None
       else
-        // an entity with no rows for any staged day writes an empty delta
-        // dir (_SUCCESS, no part files, no partition dirs) — schema
-        // inference fails there; treat it as absent. A MISSING-path
-        // failure is NOT that case — let it escape so the swap retry
-        // below can recover instead of silently reading an empty base.
-        try Some(spark.read.parquet(p))
+        // a dir with no data files (_SUCCESS only) has no schema; treat
+        // it as absent. The schema comes from one footer on the driver,
+        // so the read runs no job. A MISSING-path failure is NOT that
+        // case — let it escape so the swap retry below can recover
+        // instead of silently reading an empty base.
+        try Some(graft.core.Tables.parquet(spark, p))
         catch { case e: org.apache.spark.sql.AnalysisException
             if !graft.core.FsOps.isMissingPath(e) => None }
     if (p.endsWith("/base")) {
@@ -87,6 +87,25 @@ object MergeOnRead {
       .option("partitionOverwriteMode", "dynamic")
       .parquet(deltaPath(dir, table))
 
+  /** The base and the deltas (with their `ingest_date` partition
+    * column), or `None` for an absent layer. */
+  private def layers(spark: SparkSession, dir: String, table: String)
+      : (Option[DataFrame], Option[DataFrame]) =
+    (readOpt(spark, basePath(dir, table)), readOpt(spark, deltaPath(dir, table)))
+
+  /** Both layers as frames: an absent one is empty, with the schema of
+    * whichever layer exists on disk (base wins), else `like`'s — the
+    * template for a table with no data yet. */
+  private def orEmpty(spark: SparkSession, table: String, base: Option[DataFrame],
+      deltas: Option[DataFrame], like: Option[DataFrame]): (DataFrame, DataFrame) = {
+    val schema = base.orElse(deltas).map(_.schema).orElse(like.map(_.schema))
+      .getOrElse(throw new IllegalStateException(
+        s"$table has no base, no deltas, and no schema template"))
+    def empty = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    (base.getOrElse(empty), deltas.getOrElse(empty))
+  }
+
   /** The current snapshot view: base ∪ deltas, latest version per key —
     * row-identical to what the full-rewrite executor's table would hold.
     * Schema comes from whichever layer exists on disk (base wins); `like`
@@ -94,15 +113,9 @@ object MergeOnRead {
   def readSnapshot(spark: SparkSession, dir: String, table: String,
       keys: Seq[String], order: Seq[Column],
       like: Option[DataFrame] = None): DataFrame = {
-    val base = readOpt(spark, basePath(dir, table))
-    val deltas = readOpt(spark, deltaPath(dir, table)).map(_.drop("ingest_date"))
-    val schema = base.orElse(deltas).map(_.schema).orElse(like.map(_.schema))
-      .getOrElse(throw new IllegalStateException(
-        s"$table has no base, no deltas, and no schema template"))
-    def orEmpty(d: Option[DataFrame]) = d.getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    Merges.snapshotMerge(orEmpty(base), orEmpty(deltas), keys, order)
+    val (base, deltas) = layers(spark, dir, table)
+    val (b, d) = orEmpty(spark, table, base, deltas.map(_.drop("ingest_date")), like)
+    Merges.snapshotMerge(b, d, keys, order)
   }
 
   /** The merge-on-read view for a COLLECTION entity (§2.10b semantics:
@@ -117,15 +130,9 @@ object MergeOnRead {
     * replacement-then-carry-forward recurrence. */
   def readCollectionSnapshot(spark: SparkSession, dir: String, table: String,
       originCol: String, like: Option[DataFrame] = None): DataFrame = {
-    val base = readOpt(spark, basePath(dir, table))
-    val deltas = readOpt(spark, deltaPath(dir, table)).map(_.drop("ingest_date"))
-    val schema = base.orElse(deltas).map(_.schema).orElse(like.map(_.schema))
-      .getOrElse(throw new IllegalStateException(
-        s"$table has no base, no deltas, and no schema template"))
-    def orEmpty(d: Option[DataFrame]) = d.getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    val all = orEmpty(base).unionByName(orEmpty(deltas))
+    val (base, deltas) = layers(spark, dir, table)
+    val (b, d) = orEmpty(spark, table, base, deltas.map(_.drop("ingest_date")), like)
+    val all = b.unionByName(d)
     val winning = all.groupBy(originCol)
       .agg(max(col("etl_ingest_date")).as("__wd"))
     all.join(winning, Seq(originCol))
@@ -136,30 +143,31 @@ object MergeOnRead {
 
   /** Fold all deltas into a new base and clear them: one full-table
     * rewrite amortized over however many daily runs accumulated. Uses the
-    * same tmp+rename swap discipline as the curated overwrite. */
+    * same tmp+rename swap discipline as the curated overwrite. Each layer
+    * is listed and read once. */
   def compact(spark: SparkSession, dir: String, table: String,
       keys: Seq[String], order: Seq[Column]): Unit = {
-    if (readOpt(spark, basePath(dir, table)).isEmpty &&
-        readOpt(spark, deltaPath(dir, table)).isEmpty)
-      return // nothing staged for this table yet — no-op
     val target = new Path(basePath(dir, table))
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // ENUMERATE the delta partitions being folded BEFORE reading the
-    // snapshot: a concurrent daily appendDelta can land a new
+    // layers: a concurrent daily appendDelta can land a new
     // ingest_date= partition while the (long) rewrite runs, and a
     // recursive delete of the whole deltas/ dir afterwards would drop
     // that never-folded day's rows from every subsequent read. Only the
-    // partitions this compaction actually folded are GC'd.
+    // partitions this compaction actually folded are GC'd; the delta
+    // read below lists them all, or more.
     val dp = new Path(deltaPath(dir, table))
     val foldedParts: Seq[Path] =
       if (!fs.exists(dp)) Seq.empty
       else Option(fs.listStatus(dp)).toSeq.flatten
         .filter(st => st.isDirectory && st.getPath.getName.startsWith("ingest_date="))
         .map(_.getPath)
-    val snap = readSnapshot(spark, dir, table, keys, order)
+    val (base, deltas) = layers(spark, dir, table)
+    if (base.isEmpty && deltas.isEmpty) return // nothing staged for this table yet
+    val (b, d) = orEmpty(spark, table, base, deltas.map(_.drop("ingest_date")), None)
     val stamp = System.nanoTime()
     val tmp = new Path(s"$dir/$table/.base_staging_$stamp")
-    snap.write.mode("overwrite").parquet(tmp.toString)
+    Merges.snapshotMerge(b, d, keys, order).write.mode("overwrite").parquet(tmp.toString)
     val old = new Path(s"$dir/$table/.base_old_$stamp")
     graft.core.FsOps.atomicSwap(fs, tmp, target, old)
     // folded deltas are in the new base; clear ONLY them after the swap
@@ -188,16 +196,10 @@ object MergeOnRead {
         s"as-of $asOfDay predates the compaction horizon $ct — " +
           "that history was folded into base")
     }
-    val base = readOpt(spark, basePath(dir, table))
-    val deltas = readOpt(spark, deltaPath(dir, table))
-      .map(_.where(col("ingest_date") <= asOfDay).drop("ingest_date"))
-    val schema = base.orElse(deltas).map(_.schema).orElse(like.map(_.schema))
-      .getOrElse(throw new IllegalStateException(
-        s"$table has no base, no deltas, and no schema template"))
-    def orEmpty(d: Option[DataFrame]) = d.getOrElse(
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    Merges.snapshotMerge(orEmpty(base), orEmpty(deltas), keys, order)
+    val (base, deltas) = layers(spark, dir, table)
+    val (b, d) = orEmpty(spark, table, base,
+      deltas.map(_.where(col("ingest_date") <= asOfDay).drop("ingest_date")), like)
+    Merges.snapshotMerge(b, d, keys, order)
   }
 
   /** VACUUM: remove stranded maintenance artifacts — `.base_staging_*`

@@ -342,21 +342,21 @@ object Lifecycle {
     // Days stay SERIAL (day 2's merges read day 1's curated output), but
     // within a day the four executors are independent — distinct output
     // tables, one shared cached input — so they run as concurrent driver
-    // jobs (guide §2.6): each executor's write/swap tail back-fills the
-    // cores the others' scans freed.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try Seq("2024-01-01", "2024-01-02").foreach { day =>
+    // jobs (guide §2.6).
+    Seq("2024-01-01", "2024-01-02").foreach { day =>
       val staged = graft.ingest.Staging.stage(
         raw.where(col("day") === day).select("data"), day)
-      seg(s"day_$day")(fanOut(staged, Seq(
-        Pipelines.runSnapshot(spark, _, s"$base/cur", acctSpec),
-        Pipelines.runCollection(spark, _, s"$base/cur", collSpec),
-        Pipelines.runTraffic(spark, _, s"$base/curF", Specs.views,
-          faithful = true),
-        Pipelines.runTraffic(spark, _, s"$base/curC", Specs.views,
-          faithful = false)))(ec))
-    } finally pool.shutdown()
+      seg(s"day_$day")(graft.core.FanOut(staged, 4) { d =>
+        d.count()
+        Seq(
+          () => Pipelines.runSnapshot(spark, d, s"$base/cur", acctSpec),
+          () => Pipelines.runCollection(spark, d, s"$base/cur", collSpec),
+          () => Pipelines.runTraffic(spark, d, s"$base/curF", Specs.views,
+            faithful = true),
+          () => Pipelines.runTraffic(spark, d, s"$base/curC", Specs.views,
+            faithful = false))
+      })
+    }
     graft.core.Ckpt.free(raw) // both day stages consumed it; blocks are dead
     def uid(c: Column) = substring(c, 10, 30).cast("long")
     val snapF = spark.read.parquet(s"$base/cur/account").select(
@@ -378,22 +378,6 @@ object Lifecycle {
       .unionByName(trafF("curF", "traffic_f"))
       .unionByName(trafF("curC", "traffic_c"))
   }
-
-  /** Run `execs` over `staged` as concurrent driver jobs on `ec`.
-    * `staged` is cached and materialized ONCE before the threads start,
-    * so concurrent first use can't race-compute it, and unpersisted on
-    * every exit. When an executor fails, its siblings are awaited before
-    * the first failure is rethrown: none is still writing (or reading the
-    * freed cache) once this returns. */
-  private[queries] def fanOut(staged: DataFrame, execs: Seq[DataFrame => Unit])(
-      implicit ec: scala.concurrent.ExecutionContext): Unit =
-    try {
-      staged.cache().count()
-      val runs = execs.map(f => scala.concurrent.Future(f(staged)))
-      runs.foreach(scala.concurrent.Await.ready(_,
-        scala.concurrent.duration.Duration.Inf))
-      runs.foreach(_.value.get.get)
-    } finally { staged.unpersist(); () }
 
   /** Avro exchange-boundary round-trip through the native `graftavro`
     * DataSource V2 ([[graft.sources.AvroSource]]): an orders projection

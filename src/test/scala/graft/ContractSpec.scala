@@ -96,4 +96,21 @@ class ContractSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       s"read corpus tables via Tables.table / Tables.schemaOf: $offenders")
   }
+
+  test("the ETL reads its tables through Tables (no per-read schema job)") {
+    // a raw spark.read.parquet on a staging, curated or merge-on-read dir
+    // infers its schema in a Spark job; Tables.parquet reads the footer on
+    // the driver
+    val files = Seq("entities/Pipelines.scala", "ingest/Staging.scala",
+      "ops/MergeOnRead.scala", "jobs/ProcessDaily.scala")
+      .map(f => java.nio.file.Paths.get(s"src/main/scala/graft/$f"))
+    val call = "spark\\.read\\.parquet\\(".r
+    val offenders = files.flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f), "UTF-8")
+      call.findAllMatchIn(src).map { m =>
+        s"${f.getFileName}:${src.substring(0, m.start).count(_ == '\n') + 1}"
+      }
+    }
+    assert(offenders.isEmpty, s"read ETL tables via Tables.parquet: $offenders")
+  }
 }

@@ -23,6 +23,38 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
 
+  /** The number of Spark jobs `body` starts on this thread and the
+    * threads it spawns (which inherit its job group). The listener bus
+    * delivers in order: once a marker job run after `body` is seen, every
+    * job `body` started has been counted. */
+  def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.add(Option(e.properties.getProperty("spark.job.description"))
+            .getOrElse("job"))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try {
+      body
+      sc.setJobDescription("marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!jobs.contains("marker") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(jobs.contains("marker"), "listener never saw the marker job")
+      jobs.size - 1
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Fresh scratch dir per call, under target/ (inside the repo). */
   def scratch(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(

@@ -146,40 +146,10 @@ class TablesSpec extends SparkSpec {
   }
 
   test("Tables.table launches no Spark job; an inferring read does") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val group = s"tables-spec-${java.util.UUID.randomUUID()}"
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          jobs.add(Option(e.properties.getProperty("spark.job.description"))
-            .getOrElse("job"))
-    }
-    val sc = spark.sparkContext
-    // the bus delivers in order: once the marker job is seen, every job
-    // started before it has been counted
-    def jobsBefore(body: => Unit): Int = {
-      jobs.clear()
-      body
-      sc.setJobDescription("marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      val deadline = System.nanoTime() + 30e9.toLong
-      while (!jobs.contains("marker") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(jobs.contains("marker"), "listener never saw the marker job")
-      jobs.size - 1
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "Tables.table job count")
-    try {
-      val dir = "/root/testdata/sf0.01"
-      assert(jobsBefore(corpusTables.foreach(t => Tables.table(spark, dir, t))) == 0)
-      assert(jobsBefore(spark.read.parquet(s"$dir/orders.parquet")) >= 1,
-        "the counter is vacuous: inference should launch a job")
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
+    val dir = "/root/testdata/sf0.01"
+    assert(jobsDuring(corpusTables.foreach(t => Tables.table(spark, dir, t))) == 0)
+    assert(jobsDuring(spark.read.parquet(s"$dir/orders.parquet")) >= 1,
+      "the counter is vacuous: inference should launch a job")
   }
 
   test("schemaOf re-reads the footer: an overwrite between calls is seen") {
@@ -208,4 +178,47 @@ class TablesSpec extends SparkSpec {
     val e = intercept[AnalysisException](Tables.table(spark, dir, "absent"))
     assert(graft.core.FsOps.isMissingPath(e))
   }
+
+  test("schemaOf reads partitioned staging and merge-on-read delta dirs like inference") {
+    import graft.entities.Fixtures
+    import graft.ingest.Staging
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.types.{DateType, StringType}
+    val root = scratch("schemaof-partitioned")
+    Fixtures.writeStandardFixture(s"$root/raw/v1")
+    for (d <- Seq(Fixtures.day1, Fixtures.day2))
+      Staging.stageDay(spark, s"$root/raw/v1", s"$root/staging", d)
+    val staging = s"$root/staging"
+    graft.ops.MergeOnRead.appendDelta(
+      spark.read.parquet(staging).select(col("urn"), col("ingest_date").cast("string")
+        .as("etl_ingest_date")), s"$root/mor", "t")
+    val delta = s"$root/mor/t/delta"
+    for (p <- Seq(staging, delta)) {
+      val inferred = spark.read.parquet(p)
+      val read = Tables.parquet(spark, p)
+      assert(read.schema == inferred.schema, p)
+      assert(read.schema("ingest_date").dataType == DateType, p)
+      assert(Tables.schemaOf(spark, p).fieldNames.toSeq ==
+        inferred.schema.fieldNames.toSeq.filterNot(Set("ingest_date", "entity_name")), p)
+      assert(jobsDuring(Tables.parquet(spark, p)) == 0, p)
+    }
+    assert(Tables.parquet(spark, staging).schema("entity_name").dataType == StringType)
+    assert(rowsOf(Tables.parquet(spark, staging)) == rowsOf(spark.read.parquet(staging)))
+
+    def same(path: String, condition: String): Unit = {
+      val want = intercept[AnalysisException](spark.read.parquet(path))
+      val got = intercept[AnalysisException](Tables.schemaOf(spark, path))
+      assert(want.getCondition == condition)
+      assert(got.getCondition == want.getCondition)
+      assert(got.getMessage == want.getMessage)
+    }
+    // an entity with no rows writes a delta dir without data files
+    graft.ops.MergeOnRead.appendDelta(spark.range(0).select(
+      col("id"), col("id").cast("string").as("etl_ingest_date")), s"$root/mor", "empty")
+    same(s"$root/mor/empty/delta", "UNABLE_TO_INFER_SCHEMA")
+    same(s"$root/mor/absent/delta", "PATH_NOT_FOUND")
+  }
+
+  private def rowsOf(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 }

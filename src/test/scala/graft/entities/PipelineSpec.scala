@@ -238,4 +238,26 @@ class PipelineSpec extends SparkSpec {
     assert(dfs("issue").count() == 1)
     assert(new java.io.File(s"$out/o-r-event.tsv").exists())
   }
+
+  test("project parses the document once and matches the per-field from_json form") {
+    ran
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    val staged = Staging.readAll(spark, staging) // both days, one scan
+    def parses(df: DataFrame): Int = df.queryExecution.optimizedPlan.collect {
+      case n => n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+    }.sum
+    for (spec <- Specs.snapshots :+ Specs.repo.snapshot) {
+      val schema = graft.json.PathSchema.forPaths(spec.fields.map(_.path))
+      val perField = staged.select(Pipelines.metaCols(col("ingest_date")) ++
+        spec.fields.map(f => Pipelines.typedParsed(from_json(col("data"), schema), f)): _*)
+      val once = Pipelines.project(staged, spec.fields)
+      assert(once.schema == perField.schema, spec.table)
+      assert(once.exceptAll(perField).isEmpty && perField.exceptAll(once).isEmpty, spec.table)
+      assert(parses(once) == 1, spec.table)
+    }
+    val wide = Specs.pullRequest.fields
+    val perField = staged.select(wide.map(f => Pipelines.typedParsed(
+      from_json(col("data"), graft.json.PathSchema.forPaths(wide.map(_.path))), f)): _*)
+    assert(parses(perField) > 1, "the parse counter is vacuous")
+  }
 }

@@ -39,24 +39,24 @@ class ProcessDailyCompositeSpec extends SparkSpec {
   }
 }
 
-/** q244's per-day executor fan-out releases what it holds on failure. */
+/** The shared executor fan-out (q244's days, ProcessDaily) releases what
+  * it holds on failure. */
 class FanOutSpec extends SparkSpec {
   test("fanOut: a failing executor frees the staged cache after its siblings finish") {
     import java.util.concurrent.atomic.AtomicBoolean
     val staged = spark.range(100).toDF("id")
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
     val siblingDone = new AtomicBoolean(false)
-    try {
-      val e = intercept[IllegalStateException] {
-        Lifecycle.fanOut(staged, Seq(
-          _ => throw new IllegalStateException("injected executor failure"),
-          df => { Thread.sleep(300); df.count(); siblingDone.set(true) }))(ec)
+    val e = intercept[IllegalStateException] {
+      graft.core.FanOut(staged, 2) { d =>
+        d.count()
+        Seq(
+          () => throw new IllegalStateException("injected executor failure"),
+          () => { Thread.sleep(300); d.count(); siblingDone.set(true) })
       }
-      assert(e.getMessage == "injected executor failure")
-      assert(siblingDone.get, "the failure was rethrown while a sibling still ran")
-      assert(staged.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
-        "the staged frame is still cached after a failed fan-out")
-    } finally pool.shutdown()
+    }
+    assert(e.getMessage == "injected executor failure")
+    assert(siblingDone.get, "the failure was rethrown while a sibling still ran")
+    assert(staged.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the staged frame is still cached after a failed fan-out")
   }
 }
